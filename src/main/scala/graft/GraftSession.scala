@@ -13,13 +13,26 @@ object GraftSession {
     * (not the 200 default, which fragments small local runs). */
   def local(cores: Int, appName: String = "graft"): SparkSession =
     configure(SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString), appName)
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config(driverListing._1, driverListing._2), appName)
       .getOrCreate()
+
+  /** Local and local-cluster sessions list lake files on the driver. A
+    * glob over the post lake (one JSON object per post) expands to one
+    * root path per file, and above Spark's threshold (32 root paths)
+    * `InMemoryFileIndex` lists them in a distributed job with one task
+    * per path. Those executors share the driver's filesystem, so the job
+    * adds per-task overhead and no parallelism. Listing on executors pays
+    * off only on a real cluster against remote storage, so `configure`
+    * keeps Spark's default. */
+  val driverListing: (String, String) =
+    "spark.sql.sources.parallelPartitionDiscovery.threshold" -> Int.MaxValue.toString
 
   /** The driver-contract session shared by the `Verify`/`Bench`/
     * `EntrySmoke` mains — ONE definition so the smoke/bench/correctness
     * paths cannot drift apart in config: `local[$SPARK_GRAFT_CPUS]`,
-    * shuffle partitions matched to cores, UTC, UI off, WARN logs. */
+    * shuffle partitions matched to cores, files listed on the driver,
+    * UTC, UI off, WARN logs. */
   def driverLocal(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER opts the same contract session into a real
@@ -42,6 +55,7 @@ object GraftSession {
     val b = SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", parts)
+      .config(driverListing._1, driverListing._2)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

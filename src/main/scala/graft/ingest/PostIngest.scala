@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -135,7 +135,8 @@ object PostIngest {
     * → foreachBatch keyed merge (versioned parquet state, latest-wins).
     * `Trigger.AvailableNow` replay of the static lake equals `snapshot`;
     * `maxFilesPerTrigger` bounds each micro-batch so the merge is
-    * exercised across batches. */
+    * exercised across batches. Only the final state version outlives the
+    * call; a glob that matches no file yields an empty snapshot. */
   def streamSnapshot(spark: SparkSession, globPath: String,
                      maxFilesPerTrigger: Int = 3): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
@@ -171,9 +172,16 @@ object PostIngest {
       }
       .start()
     q.awaitTermination()
+    // the query is over: drop its checkpoint and every superseded version,
+    // keeping only the one the returned frame reads
+    Option(new java.io.File(work).listFiles()).toSeq.flatten
+      .filterNot(f => latest.contains(f.getPath))
+      .foreach(graft.streaming.Replay.deleteRecursively)
     latest match {
       case Some(path) => spark.read.parquet(path)
-      case None       => spark.emptyDataFrame
+      // no file matched the glob yet: an empty snapshot, still searchable
+      case None => spark.createDataFrame(
+        java.util.Collections.emptyList[Row](), flatten(stream).schema)
     }
   }
 

@@ -144,6 +144,25 @@ class DomainPipelineSpec extends AnyFunSuite {
     assert(streamed == batch)
   }
 
+  test("streaming replay of a glob with no file yet is an empty, searchable snapshot") {
+    val empty = java.nio.file.Files.createTempDirectory("graft_empty_lake")
+    val streamed = PostIngest.streamSnapshot(spark, s"$empty/*/*.json")
+    assert(streamed.columns.toSeq == snapshot.columns.toSeq)
+    assert(History.searchPosts(streamed, keyword = Some("sunset"), hashtag = Some("travel"),
+      mention = Some("bob")).count() == 0)
+  }
+
+  test("streaming replay leaves only the state version its result reads") {
+    // 8 fixture files at 3 per trigger: micro-batches 0, 1 and 2
+    val streamed = PostIngest.streamSnapshot(spark, s"$fixtures/posts/*", maxFilesPerTrigger = 3)
+    val version = new java.io.File(new java.net.URI(streamed.inputFiles.head)).getParentFile
+    assert(version.getName == "state_v2")
+    assert(version.getParentFile.list().toSeq == Seq("state_v2"))
+    val cols = Seq("id", "like_count", "followers", "media_url")
+    assert(streamed.select(cols.map(col): _*).orderBy("id").collect().toSeq ==
+      snapshot.select(cols.map(col): _*).orderBy("id").collect().toSeq)
+  }
+
   test("ingest stats count valid vs corrupt records (P12 observability)") {
     val row = graft.ingest.PostIngest.ingestStats(spark, s"$fixtures/posts/*")
       .collect().head
