@@ -113,4 +113,16 @@ object GraftSession {
       .config("spark.sql.files.maxPartitionBytes", s"${128 * 1024 * 1024}")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.compression.codec", "zstd")
+
+  /** Label the jobs `f` launches so the UI and job listeners can
+    * attribute their cost to a phase, then restore the description the
+    * calling thread had (Spark's job description is thread-local, and
+    * clearing it instead would strip the caller's own label, e.g. a
+    * streaming micro-batch's, from every job it launches afterwards). */
+  private[graft] def labeled[T](ss: SparkSession, desc: String)(f: => T): T = {
+    val sc = ss.sparkContext
+    val old = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try f finally sc.setJobDescription(old)
+  }
 }

@@ -1,6 +1,7 @@
 package graft.enrich
 
 import graft.Tables
+import graft.plans.ScaleTechniques
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -902,15 +903,6 @@ object Multimodal {
   def qm14PcmDecode(spark: SparkSession, dir: String): DataFrame =
     pcmDecodeFrame(Tables(spark, dir, "documents")).orderBy("media_id")
 
-  /** Compute-bound codec kernels partition by CORES, not input bytes —
-    * a small corpus arrives as one file split and would otherwise run
-    * the whole decode on one thread (the qd43 lesson; at 100 TB the
-    * scan's own thousands of splits dominate and this repartition is a
-    * no-op-sized shuffle). Applied to the multi-millisecond-per-row
-    * decoders (qm14–qm18); the metadata walks stay scan-partitioned. */
-  private def spreadByCores(df: DataFrame): DataFrame =
-    graft.plans.ScaleTechniques.spreadByCores(df)
-
   /** The per-row mux+demux+decode kernel shared by qm14 and its
     * streaming form. */
   private[graft] def pcmDecodeFrame(docsDf: DataFrame): DataFrame = {
@@ -918,7 +910,9 @@ object Multimodal {
     import spark.implicits._
     docsDf
       .filter(pmod(col("doc_id"), lit(3)) === 1) // the media table's video rows
-      .transform(spreadByCores)
+      // only the multi-millisecond-per-row decoders (qm14–qm18) spread by
+      // cores; the metadata walks stay scan-partitioned
+      .transform(ScaleTechniques.spreadByCores)
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions { batch =>
         batch.map { case (id, text) =>
@@ -995,7 +989,7 @@ object Multimodal {
     import spark.implicits._
     docsDf
       .filter(pmod(col("doc_id"), lit(3)) === 1) // the media table's video rows
-      .transform(spreadByCores)
+      .transform(ScaleTechniques.spreadByCores)
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions { batch =>
         batch.map { case (id, text) =>
@@ -1065,7 +1059,7 @@ object Multimodal {
     docsDf
       .filter(pmod(col("doc_id"), lit(3)) === 2) // the media table's audio rows
       .filter(octet_length(col("text")) >= 1) // mirrors qm5's empty-payload gate
-      .transform(spreadByCores)
+      .transform(ScaleTechniques.spreadByCores)
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions { batch =>
         batch.map { case (id, text) =>
@@ -1204,7 +1198,7 @@ object Multimodal {
     import spark.implicits._
     docsDf
       .filter(pmod(col("doc_id"), lit(3)) === 1) // the media table's video rows
-      .transform(spreadByCores)
+      .transform(ScaleTechniques.spreadByCores)
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions { batch =>
         batch.map { case (id, text) =>
@@ -1330,7 +1324,7 @@ object Multimodal {
     import spark.implicits._
     docsDf
       .filter(pmod(col("doc_id"), lit(3)) === 1) // the media table's video rows
-      .transform(spreadByCores)
+      .transform(ScaleTechniques.spreadByCores)
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions { batch =>
         batch.map { case (id, text) =>

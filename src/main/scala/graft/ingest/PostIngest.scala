@@ -1,5 +1,6 @@
 package graft.ingest
 
+import graft.streaming.Replay
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -62,33 +63,34 @@ object PostIngest {
     StructField("swipe_ups", LongType),
     StructField("_corrupt_record", StringType)))
 
-  /** S1: PERMISSIVE JSON scan of the post lake. The FULL ingest envelope
-    * the reference wraps each document with — objectKey, createdDate,
-    * content_type, content_length (s3-to-es_aws.py:163-168) — is derived
-    * from real file metadata: content_length is the actual object size
-    * (`_metadata.file_size`), content_type from the object key suffix. */
-  def readPosts(spark: SparkSession, path: String): DataFrame = {
-    spark.read
-      .schema(postSchema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path)
-      .withColumn("objectKey", decodedObjectKey) // F5
-      .withColumn("createdDate", col("timestamp")) // replay: arrival == post time
-      .withColumn("content_length", col("_metadata.file_size"))
-      .withColumn("content_type",
-        when(col("objectKey").endsWith(".json"), lit("application/json"))
-          .otherwise(lit("application/octet-stream")))
-  }
+  /** S1: PERMISSIVE JSON scan of the post lake. */
+  def readPosts(spark: SparkSession, path: String): DataFrame =
+    withEnvelope(spark.read.schema(postSchema).options(jsonOptions).json(path))
 
-  /** F5: the Lambda URL-decodes the S3 event key (unquote_plus,
+  /** The JSON options and the envelope below are shared by the batch and
+    * streaming readers, so the two scans can never diverge. */
+  private val jsonOptions = Map(
+    "mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record")
+
+  /** The FULL ingest envelope the reference wraps each document with —
+    * objectKey, createdDate, content_type, content_length
+    * (s3-to-es_aws.py:163-168) — derived from real file metadata:
+    * content_length is the actual object size (`_metadata.file_size`),
+    * content_type from the object key suffix.
+    *
+    * F5: the Lambda URL-decodes the S3 event key (unquote_plus,
     * s3-to-es_aws.py:148-149). `input_file_name()` is PERCENT-encoded (a
     * literal '+' stays '+'), so '+' is protected before the form-decoding
     * url_decode — otherwise a file named a+b.json would corrupt to
-    * "a b.json". Shared by the batch and streaming readers so their
-    * objectKey values can never diverge. */
-  private def decodedObjectKey =
-    url_decode(replace(input_file_name(), lit("+"), lit("%2B")))
+    * "a b.json". */
+  private def withEnvelope(raw: DataFrame): DataFrame = raw
+    .withColumn("objectKey",
+      url_decode(replace(input_file_name(), lit("+"), lit("%2B")))) // F5
+    .withColumn("createdDate", col("timestamp")) // replay: arrival == post time
+    .withColumn("content_length", col("_metadata.file_size"))
+    .withColumn("content_type",
+      when(col("objectKey").endsWith(".json"), lit("application/json"))
+        .otherwise(lit("application/octet-stream")))
 
   private val extPattern = "\\.(\\w{3,4})\\?" // F1: reference regex uses a
   // lookahead `\.\w{3,4}(?=\?)` (s3-to-es_aws.py:92); Spark's RE2-style
@@ -139,44 +141,26 @@ object PostIngest {
     * call; a glob that matches no file yields an empty snapshot. */
   def streamSnapshot(spark: SparkSession, globPath: String,
                      maxFilesPerTrigger: Int = 3): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val work = java.nio.file.Files.createTempDirectory("graft_posts").toString
-    graft.streaming.Replay.cleanupAtExit(work)
+    val work = Replay.resolveWork(None, "graft_posts")
     @volatile var latest: Option[String] = None
-    val stream = spark.readStream
-      .schema(postSchema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
+    val stream = withEnvelope(spark.readStream.schema(postSchema).options(jsonOptions)
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .json(globPath)
-      .withColumn("objectKey", decodedObjectKey) // F5, identical to batch
-      .withColumn("createdDate", col("timestamp"))
-      .withColumn("content_length", col("_metadata.file_size"))
-      .withColumn("content_type",
-        when(col("objectKey").endsWith(".json"), lit("application/json"))
-          .otherwise(lit("application/octet-stream")))
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        val incoming = flatten(batch)
-        val merged = latest match {
-          case Some(prev) => ss.read.parquet(prev).unionByName(incoming)
-          case None       => incoming
-        }
-        val next = s"$work/state_v$batchId"
-        latestPerPost(merged).write.mode("overwrite").parquet(next)
-        latest = Some(next)
-        ()
+      .json(globPath))
+    Replay.drain(stream, work) { (batch, batchId) =>
+      val incoming = flatten(batch)
+      val merged = latest match {
+        case Some(prev) => batch.sparkSession.read.parquet(prev).unionByName(incoming)
+        case None       => incoming
       }
-      .start()
-    q.awaitTermination()
+      val next = s"$work/state_v$batchId"
+      latestPerPost(merged).write.mode("overwrite").parquet(next)
+      latest = Some(next)
+    }
     // the query is over: drop its checkpoint and every superseded version,
     // keeping only the one the returned frame reads
     Option(new java.io.File(work).listFiles()).toSeq.flatten
       .filterNot(f => latest.contains(f.getPath))
-      .foreach(graft.streaming.Replay.deleteRecursively)
+      .foreach(Replay.deleteRecursively)
     latest match {
       case Some(path) => spark.read.parquet(path)
       // no file matched the glob yet: an empty snapshot, still searchable

@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.GraftSession.labeled
 import graft.Tables
 import graft.dedup.{Clusters, Collapse}
 import graft.operators.VectorOps.{cosine, dot}
@@ -268,8 +269,7 @@ object SemDedup {
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
     val idxF = Future {
-      spark.sparkContext.setJobDescription("semdedup: base index build")
-      try perSession(spark).computeIfAbsent(
+      labeled(spark, "semdedup: base index build")(perSession(spark).computeIfAbsent(
         s"$memoKey|$basePred|$threshold|$s", _ => {
         val t = java.nio.file.Files.createTempDirectory("graft_sem_idx").toString
         graft.streaming.Replay.cleanupAtExit(t)
@@ -289,7 +289,7 @@ object SemDedup {
           .select(col("a.vec_id").as("doc_a"), col("b.vec_id").as("doc_b"))
           .write.mode("overwrite").parquet(s"$t/pairs")
         t
-      }) finally spark.sparkContext.setJobDescription(null)
+      }))
     }
 
     // increment pass: O(increment) assignment, broadcast probe of the

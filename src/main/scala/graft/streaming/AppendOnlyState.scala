@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.GraftSession.labeled
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -186,9 +187,7 @@ private[streaming] final class AppendOnlyState(work: String,
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
     val appendWrites = appends.toSeq.map { case (t, mkDf) => Future {
-      // description is thread-local — label each pool thread's write
       val df = mkDf()
-      ss.sparkContext.setJobDescription(s"state: append $t")
       // NO blanket coalesce here: for several streams the append frame
       // IS the batch kernel pass (qs17's map-side feature rows, the
       // codec streams), and a coalesce would squeeze that compute into
@@ -196,14 +195,19 @@ private[streaming] final class AppendOnlyState(work: String,
       // coalesce(4)'d. Callers whose append frames are cheap
       // projections of checkpointed blocks coalesce at the call site;
       // compaction below still bounds the steady-state file count.
-      try df.write.mode("overwrite").parquet(s"$stateDir/$t/b$batchId")
-      finally ss.sparkContext.setJobDescription(null)
+      // The description is thread-local: label each pool thread's write.
+      labeled(ss, s"state: append $t")(
+        df.write.mode("overwrite").parquet(s"$stateDir/$t/b$batchId"))
     }}
     val sideWrites = side.map { case (label, work) => Future {
-      ss.sparkContext.setJobDescription(label)
-      try work() finally ss.sparkContext.setJobDescription(null)
+      labeled(ss, label)(work())
     }}
-    Await.result(Future.sequence(appendWrites ++ sideWrites), Duration.Inf)
+    // wait for EVERY write before failing: a replay of this batch must
+    // not land on top of sibling writes still in flight. The first
+    // failure (in submission order) is rethrown as its original exception.
+    val writes = appendWrites ++ sideWrites
+    writes.foreach(Await.ready(_, Duration.Inf))
+    writes.flatMap(_.value.flatMap(_.failed.toOption)).headOption.foreach(e => throw e)
     hasData = true
     if (!replay) batchesInGen += 1
     if (batchesInGen >= compactEvery) {
@@ -213,10 +217,8 @@ private[streaming] final class AppendOnlyState(work: String,
         val df =
           if (files.nonEmpty) ss.read.schema(sch).parquet(files: _*)
           else ss.createDataFrame(ss.sparkContext.emptyRDD[Row], sch)
-        ss.sparkContext.setJobDescription(s"state: compact $t")
-        try folds.get(t).fold(df)(f => f(df))
-          .coalesce(4).write.mode("overwrite").parquet(s"$next/$t/c${gen + 1}")
-        finally ss.sparkContext.setJobDescription(null)
+        labeled(ss, s"state: compact $t")(folds.get(t).fold(df)(f => f(df))
+          .coalesce(4).write.mode("overwrite").parquet(s"$next/$t/c${gen + 1}"))
       }
       val upto = fs.create(new Path(s"$next/_upto"), true)
       try upto.write(batchId.toString.getBytes) finally upto.close()

@@ -6,7 +6,6 @@ import graft.Tables
 import graft.similarity.Ann
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Streaming PQ ingestion — the arrival-time form of qe8_pq_topk
@@ -30,19 +29,19 @@ import org.apache.spark.sql.types._
   * memory-bandwidth compression that makes the 100 TB ADC scan viable
   * is exactly what makes the state append tiny here.
   *
-  * Restart contract shared with the sibling streams: the codes index
-  * and the streaming checkpoint live side by side under `workDir` and
-  * reload together; a batch replayed from the at-least-once window
-  * re-encodes the same vectors (pure function of the frozen codebook)
-  * and overwrites its own batch-keyed subdir — a double append would
-  * duplicate (vec_id, codes) rows and corrupt every ADC ranking the
-  * duplicated vector appears in, which the shared qe8 oracle would
+  * A batch replayed from the at-least-once window re-encodes the same
+  * vectors (pure function of the frozen codebook); a double append
+  * would duplicate (vec_id, codes) rows and corrupt every ADC ranking
+  * the duplicated vector appears in, which the shared qe8 oracle would
   * catch. */
 object PqStream {
 
   private val embStreamSchema = StructType(Seq(
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType))))
+
+  private def embStream(spark: SparkSession, dir: String, maxFilesPerTrigger: Int) =
+    Replay.parquetStream(spark, embStreamSchema, dir, None, Some(maxFilesPerTrigger))
 
   def streamPqTopk(spark: SparkSession, stagedDir: String, cb: DataFrame,
                    m: Int, subDim: Int, k: Int = 5,
@@ -51,34 +50,17 @@ object PqStream {
                    maxFilesPerTrigger: Int = 1,
                    compactEvery: Int = 16,
                    workDir: Option[String] = None): DataFrame = {
-    val work = workDir match {
-      case Some(w) =>
-        Files.createDirectories(java.nio.file.Paths.get(w)); w
-      case None =>
-        val t = Files.createTempDirectory("graft_spq").toString
-        Replay.cleanupAtExit(t); t
-    }
+    val work = Replay.resolveWork(workDir, "graft_spq")
     val codesSchema = StructType(Seq(
       StructField("vec_id", LongType),
       StructField("codes", ArrayType(IntegerType))))
     val state = new AppendOnlyState(work, Seq(("codes", codesSchema)),
       compactEvery)
-    val q = spark.readStream.schema(embStreamSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "codes" -> Ann.pqCodes(batch, cb, m, subDim))
-        }
-        Replay.maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    Replay.drain(embStream(spark, stagedDir, maxFilesPerTrigger), work,
+        state.alreadyFolded) { (batch, batchId) =>
+      state.endBatch(batch.sparkSession, batchId,
+        "codes" -> Ann.pqCodes(batch, cb, m, subDim))
+    }
     val lake = spark.read.schema(embStreamSchema).parquet(stagedDir)
     Ann.adcTopk(Ann.querySample(lake, pred, maxQ), cb,
       state.read(spark, "codes"), k, m, subDim)
@@ -121,38 +103,21 @@ object PqStream {
                       workDir: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.operators.VectorOps.cosine
-    val work = workDir match {
-      case Some(w) =>
-        Files.createDirectories(java.nio.file.Paths.get(w)); w
-      case None =>
-        val t = Files.createTempDirectory("graft_sivfpq").toString
-        Replay.cleanupAtExit(t)
-        t
-    }
+    val work = Replay.resolveWork(workDir, "graft_sivfpq")
     val idx = s"$work/codes"
-    val q = spark.readStream.schema(embStreamSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cells = Ann.assignments(
-            batch.withColumn("label", lit(0)), cents)
-          .select(col("vec_id"), col("cell").cast("int").as("cell"))
-        Ann.pqCodes(batch, cb, m, subDim)
-          .join(cells, "vec_id")
-          .withColumn("b", lit(batchId))
-          .repartition(col("cell")) // one file per (batch, cell)
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("b", "cell")
-          .parquet(idx)
-        Replay.maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    Replay.drain(embStream(spark, stagedDir, maxFilesPerTrigger), work) { (batch, batchId) =>
+      val cells = Ann.assignments(
+          batch.withColumn("label", lit(0)), cents)
+        .select(col("vec_id"), col("cell").cast("int").as("cell"))
+      Ann.pqCodes(batch, cb, m, subDim)
+        .join(cells, "vec_id")
+        .withColumn("b", lit(batchId))
+        .repartition(col("cell")) // one file per (batch, cell)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("b", "cell")
+        .parquet(idx)
+    }
     val lake = spark.read.schema(embStreamSchema).parquet(stagedDir)
     val sample = Ann.querySample(lake, pred, maxQ)
     val queries = sample
@@ -224,34 +189,17 @@ object PqStream {
                    maxFilesPerTrigger: Int = 1,
                    compactEvery: Int = 16,
                    workDir: Option[String] = None): DataFrame = {
-    val work = workDir match {
-      case Some(w) =>
-        Files.createDirectories(java.nio.file.Paths.get(w)); w
-      case None =>
-        val t = Files.createTempDirectory("graft_ssq").toString
-        Replay.cleanupAtExit(t); t
-    }
+    val work = Replay.resolveWork(workDir, "graft_ssq")
     val codesSchema = StructType(Seq(
       StructField("vec_id", LongType),
       StructField("codes", ArrayType(IntegerType))))
     val state = new AppendOnlyState(work, Seq(("codes", codesSchema)),
       compactEvery)
-    val q = spark.readStream.schema(embStreamSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "codes" -> Ann.sqCodesWith(batch, mn, mx))
-        }
-        Replay.maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    Replay.drain(embStream(spark, stagedDir, maxFilesPerTrigger), work,
+        state.alreadyFolded) { (batch, batchId) =>
+      state.endBatch(batch.sparkSession, batchId,
+        "codes" -> Ann.sqCodesWith(batch, mn, mx))
+    }
     val lake = spark.read.schema(embStreamSchema).parquet(stagedDir)
     Ann.sqRank(state.read(spark, "codes"), weights,
       Ann.querySample(lake, pred, maxQ).select(col("vec_id")), k)
@@ -297,11 +245,9 @@ object PqStream {
     * batch boundary: a query's candidate set and every greedy step can
     * mix vectors that arrived in different batches.
     *
-    * Restart contract as the codes-index siblings: batch-keyed
-    * overwrites + `alreadyFolded` skip (a double-appended batch would
-    * duplicate vectors, corrupting the pair frame's cand_a ≠ cand_b
-    * shape and every affected trace — which the shared oracle catches);
-    * kill-tested in RestartSpec. */
+    * A double-appended batch would duplicate vectors, corrupting the
+    * pair frame's cand_a ≠ cand_b shape and every affected trace, which
+    * the shared oracle catches. */
   def streamMmr(spark: SparkSession, stagedDir: String,
                 k: Int = Ann.DefaultTopK,
                 c: Int = Ann.DefaultMmrCandidates,
@@ -310,31 +256,14 @@ object PqStream {
                 maxFilesPerTrigger: Int = 1,
                 compactEvery: Int = 16,
                 workDir: Option[String] = None): DataFrame = {
-    val work = workDir match {
-      case Some(w) =>
-        Files.createDirectories(java.nio.file.Paths.get(w)); w
-      case None =>
-        val t = Files.createTempDirectory("graft_smmr").toString
-        Replay.cleanupAtExit(t); t
-    }
+    val work = Replay.resolveWork(workDir, "graft_smmr")
     val state = new AppendOnlyState(work, Seq(("vx", embStreamSchema)),
       compactEvery)
-    val q = spark.readStream.schema(embStreamSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "vx" -> batch.select(col("vec_id"), col("embedding")))
-        }
-        Replay.maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    Replay.drain(embStream(spark, stagedDir, maxFilesPerTrigger), work,
+        state.alreadyFolded) { (batch, batchId) =>
+      state.endBatch(batch.sparkSession, batchId,
+        "vx" -> batch.select(col("vec_id"), col("embedding")))
+    }
     Ann.mmrTopkFrom(state.read(spark, "vx"), k, c, lambdaPct, maxQ)
   }
 
@@ -348,6 +277,10 @@ object PqStream {
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
+
+  private def pcaStream(spark: SparkSession, dir: String, maxFilesPerTrigger: Int) =
+    Replay.parquetStream(spark, pcaStreamSchema, dir, Some("*.parquet"),
+      Some(maxFilesPerTrigger))
 
   /** Two-file embeddings lake CARRYING labels (qs29 projects the full
     * row), memoized like the qs18/qs20 lake. */
@@ -384,13 +317,7 @@ object PqStream {
                 compactEvery: Int = 16,
                 workDir: Option[String] = None): DataFrame = {
     import graft.similarity.Pca
-    val work = workDir match {
-      case Some(w) =>
-        Files.createDirectories(java.nio.file.Paths.get(w)); w
-      case None =>
-        val t = Files.createTempDirectory("graft_spca").toString
-        Replay.cleanupAtExit(t); t
-    }
+    val work = Replay.resolveWork(workDir, "graft_spca")
     val smSchema = StructType(Seq(
       StructField("i", IntegerType),
       StructField("j", IntegerType),
@@ -398,28 +325,16 @@ object PqStream {
     val state = new AppendOnlyState(work, Seq(("sm", smSchema)), compactEvery,
       folds = Map("sm" -> ((df: DataFrame) =>
         df.groupBy("i", "j").agg(sum("c").as("c")))))
-    val q = spark.readStream.schema(pcaStreamSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          val acc = Pca.secondMoment(Pca.quantized(batch), dim)
-          val rows = acc.indices.collect {
-            case idx if acc(idx) != 0L => (idx / dim, idx % dim, acc(idx))
-          }
-          val sess = batch.sparkSession
-          import sess.implicits._
-          state.endBatch(sess, batchId, "sm" -> rows.toDF("i", "j", "c"))
-        }
-        Replay.maybePoison(batchId)
-        ()
+    Replay.drain(pcaStream(spark, stagedDir, maxFilesPerTrigger), work,
+        state.alreadyFolded) { (batch, batchId) =>
+      val acc = Pca.secondMoment(Pca.quantized(batch), dim)
+      val rows = acc.indices.collect {
+        case idx if acc(idx) != 0L => (idx / dim, idx % dim, acc(idx))
       }
-      .start()
-    q.awaitTermination()
+      val sess = batch.sparkSession
+      import sess.implicits._
+      state.endBatch(sess, batchId, "sm" -> rows.toDF("i", "j", "c"))
+    }
     val folded = state.read(spark, "sm").groupBy("i", "j")
       .agg(sum("c").as("c")).collect()
     val second = new Array[Long](dim * dim)
@@ -449,13 +364,7 @@ object PqStream {
                      compactEvery: Int = 16,
                      workDir: Option[String] = None): DataFrame = {
     import graft.similarity.Pca
-    val work = workDir match {
-      case Some(w) =>
-        Files.createDirectories(java.nio.file.Paths.get(w)); w
-      case None =>
-        val t = Files.createTempDirectory("graft_sembdrift").toString
-        Replay.cleanupAtExit(t); t
-    }
+    val work = Replay.resolveWork(workDir, "graft_sembdrift")
     val wiSchema = StructType(Seq(
       StructField("w", LongType),
       StructField("i", IntegerType),
@@ -464,23 +373,11 @@ object PqStream {
     val state = new AppendOnlyState(work, Seq(("wi", wiSchema)), compactEvery,
       folds = Map("wi" -> ((df: DataFrame) =>
         df.groupBy("w", "i").agg(sum("s").as("s"), sum("n").as("n")))))
-    val q = spark.readStream.schema(pcaStreamSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(stagedDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "wi" -> Pca.embDriftSums(Pca.quantized(batch), span))
-        }
-        Replay.maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    Replay.drain(pcaStream(spark, stagedDir, maxFilesPerTrigger), work,
+        state.alreadyFolded) { (batch, batchId) =>
+      state.endBatch(batch.sparkSession, batchId,
+        "wi" -> Pca.embDriftSums(Pca.quantized(batch), span))
+    }
     Pca.embDriftReport(
       state.read(spark, "wi").groupBy("w", "i")
         .agg(sum("s").as("s"), sum("n").as("n")), alarm)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.nio.file.Files
+import graft.GraftSession.labeled
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -71,20 +72,10 @@ object Replay {
       throw new RuntimeException(s"test poison: crash after batch $batchId")
     }
 
-  /** Label the jobs an eager action launches (guide §1.5) so the UI and
-    * the JobProfile listener can attribute per-batch cost to its phase;
-    * restores the caller's description (thread-local). */
-  private[graft] def labeled[T](ss: SparkSession, desc: String)(f: => T): T = {
-    val sc = ss.sparkContext
-    val old = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(desc)
-    try f finally sc.setJobDescription(old)
-  }
-
   /** Resolve a caller-supplied durable work dir (restartable: state and
     * streaming checkpoint live side by side and reload together) or a
     * fresh temp dir cleaned at JVM exit (the one-shot form). */
-  private def resolveWork(workDir: Option[String], prefix: String): String =
+  private[graft] def resolveWork(workDir: Option[String], prefix: String): String =
     workDir match {
       case Some(w) =>
         Files.createDirectories(java.nio.file.Paths.get(w)); w
@@ -122,17 +113,55 @@ object Replay {
       .parquet(dir).schema("ts").dataType
     val schema = StructType(eventsSchema.map(f =>
       if (f.name == "ts") f.copy(dataType = probed) else f))
-    val reader = spark.readStream.schema(schema)
-      .option("pathGlobFilter", pathGlobFilter)
-    maxFilesPerTrigger.foreach(n =>
-      reader.option("maxFilesPerTrigger", n.toString))
-    val raw = reader.parquet(dir)
+    val raw = parquetStream(spark, schema, dir, Some(pathGlobFilter), maxFilesPerTrigger)
     probed match {
       case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast("timestamp"))
       case _ => raw
     }
   }
+
+  /** Explicit-schema parquet file source over `dir`; each option is set
+    * only when given. */
+  private[streaming] def parquetStream(spark: SparkSession, schema: StructType,
+                                       dir: String,
+                                       pathGlobFilter: Option[String],
+                                       maxFilesPerTrigger: Option[Int]): DataFrame = {
+    val reader = spark.readStream.schema(schema)
+    pathGlobFilter.foreach(reader.option("pathGlobFilter", _))
+    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
+    reader.parquet(dir)
+  }
+
+  /** The one runner every fold stream goes through: an `AvailableNow`
+    * replay of `source` whose checkpoint lives at `work/ckpt`, running
+    * `body` once per micro-batch and blocking until the query ends.
+    *
+    * Restart contract (stated here once for every stream that passes a
+    * `workDir`): the stream's state lives NEXT TO its checkpoint under
+    * `work` and the two reload together, so a restarted run skips the
+    * already-ingested files AND still has their state. A batch replayed
+    * from the at-least-once window (a crash after its writes, before the
+    * checkpoint commit) recomputes the same delta from the same input
+    * and OVERWRITES its own batch-keyed subdirs instead of appending
+    * twice; a batch that compaction already folded in can no longer be
+    * excluded from state reads, so stateful callers pass
+    * `skip = state.alreadyFolded` and it is skipped wholesale (its
+    * writes all completed: compaction runs inside its `endBatch`). The
+    * test fault hook (`maybePoison`) fires after every batch, run or
+    * skipped. */
+  private[graft] def drain(source: DataFrame, work: String,
+                           skip: Long => Boolean = _ => false)
+                          (body: (DataFrame, Long) => Unit): Unit =
+    source.writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", s"$work/ckpt")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!skip(batchId)) body(batch, batchId)
+        maybePoison(batchId)
+      }
+      .start()
+      .awaitTermination()
 
   /** Latest-wins per user, deterministic tie-break on event_id — the
     * keyed fold shared by `streamUpsert`'s per-batch reduction, its
@@ -158,15 +187,9 @@ object Replay {
     * O(distinct users), and the final read folds the appended generations
     * once.
     *
-    * Restart contract (shared by all foreachBatch state in this object):
-    * every stream's state lives NEXT TO its streaming checkpoint under one
-    * `work` dir and the two reload together — already-ingested files are
-    * skipped AND their state is still there. A batch replayed from the
-    * at-least-once window recomputes the same delta from the same input
-    * batch and OVERWRITES its own batch-keyed subdir instead of appending
-    * twice; a batch already folded by compaction is skipped wholesale.
-    * Pass `workDir` for the durable/restartable form; the default is a
-    * fresh temp dir per invocation (one-shot, cleaned at JVM exit). */
+    * Pass `workDir` for the durable/restartable form (see `drain`); the
+    * default is a fresh temp dir per invocation (one-shot, cleaned at JVM
+    * exit), as for every stream here. */
   def streamUpsert(spark: SparkSession, dir: String,
                    workDir: Option[String] = None,
                    pathGlobFilter: String = "events.parquet",
@@ -179,21 +202,12 @@ object Replay {
     val state = new AppendOnlyState(work, Seq(("latest", stateSchema)),
       compactEvery, folds = Map("latest" -> (latestWins _)))
 
-    val q = eventStream(spark, dir, pathGlobFilter, maxFilesPerTrigger)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          val delta = latestWins(
-            batch.select("user_id", "event_id", "event_type", "ts"))
-          state.endBatch(batch.sparkSession, batchId, "latest" -> delta)
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(eventStream(spark, dir, pathGlobFilter, maxFilesPerTrigger), work,
+        state.alreadyFolded) { (batch, batchId) =>
+      val delta = latestWins(
+        batch.select("user_id", "event_id", "event_type", "ts"))
+      state.endBatch(batch.sparkSession, batchId, "latest" -> delta)
+    }
 
     latestWins(state.read(spark, "latest"))
       .select(col("user_id"), col("event_id"), col("event_type"),
@@ -208,6 +222,10 @@ object Replay {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
+  private def docsStream(spark: SparkSession, dir: String, pathGlobFilter: String,
+                         maxFilesPerTrigger: Int): DataFrame =
+    parquetStream(spark, docsSchema, dir, Some(pathGlobFilter), Some(maxFilesPerTrigger))
+
   /** Streaming incremental corpus dedup — the arrival-time form of
     * qd1_dedup_exact: documents stream in, each micro-batch folds its
     * per-hash (min doc_id, count) aggregate into the accumulated state.
@@ -220,11 +238,9 @@ object Replay {
     * rows and I/O; the (min, sum) fold runs at compaction and at the
     * final read, so accumulated state is never rewritten per batch. At
     * 100 TB the state table would be a transactional keyed table; the
-    * append-dir scheme keeps the semantics. Same restart contract as
-    * `streamUpsert`: a replayed batch recomputes the same delta and
-    * overwrites its own batch-keyed subdir — appending a second copy
-    * would double-count `n_copies`, which the exact-count oracle would
-    * catch. */
+    * append-dir scheme keeps the semantics. A replayed batch appending a
+    * second copy would double-count `n_copies`, which the exact-count
+    * oracle would catch. */
   def streamCorpusDedup(spark: SparkSession, dir: String,
                         maxFilesPerTrigger: Int = 1,
                         pathGlobFilter: String = "*.parquet",
@@ -241,26 +257,14 @@ object Replay {
           sum("n_copies").as("n_copies"))
     val state = new AppendOnlyState(work, Seq(("agg", aggSchema)),
       compactEvery, folds = Map("agg" -> (fold _)))
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          val delta = batch
-            .groupBy(md5(col("text")).as("text_hash"))
-            .agg(min("doc_id").as("keep_doc_id"),
-              count(lit(1)).as("n_copies"))
-          state.endBatch(batch.sparkSession, batchId, "agg" -> delta)
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(docsStream(spark, dir, pathGlobFilter, maxFilesPerTrigger), work,
+        state.alreadyFolded) { (batch, batchId) =>
+      val delta = batch
+        .groupBy(md5(col("text")).as("text_hash"))
+        .agg(min("doc_id").as("keep_doc_id"),
+          count(lit(1)).as("n_copies"))
+      state.endBatch(batch.sparkSession, batchId, "agg" -> delta)
+    }
     fold(state.read(spark, "agg"))
       .select("text_hash", "keep_doc_id", "n_copies")
       .orderBy("keep_doc_id")
@@ -320,11 +324,8 @@ object Replay {
     * folded marks equal qd23's count-window marks regardless of arrival
     * order or batch boundaries, and the driver hash-checks this stream
     * against the same SQL oracle. Span merge + text reconstruction are
-    * literally shared code (`TextOps.spansFromMarks`).
-    *
-    * Same restart contract as the sibling streams: state and checkpoint
-    * reload together under `workDir`; a replayed batch excludes its own
-    * crashed writes from the probe and overwrites its batch-keyed dirs. */
+    * literally shared code (`TextOps.spansFromMarks`). A replayed batch
+    * excludes its own crashed writes from the probe. */
   def streamDupSpans(spark: SparkSession, dir: String,
                      k: Int = 8,
                      maxFilesPerTrigger: Int = 1,
@@ -343,62 +344,50 @@ object Replay {
     val state = new AppendOnlyState(work,
       Seq(("occ", occSchema), ("marks", marksSchema)), compactEvery,
       folds = Map("marks" -> ((df: DataFrame) => df.distinct())))
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          val ss = batch.sparkSession
-          import ss.implicits._
-          val b = batch.select("doc_id", "text").as[(Long, String)]
-            .flatMap { case (id, text) =>
-              graft.operators.TextOps.positionalShingles(text, k)
-                .map { case (p, s) => (id, p, s) } }
-            .toDF("doc_id", "pos", "shingle")
-            // 128-bit digest key, the qd23/Collapse shape: the count
-            // window, the state, and the probes all move 16-byte keys
-            // instead of window text (see qd23DupSpans' collision note)
-            .select(xxhash64(lit(1), col("shingle")).as("k1"),
-              xxhash64(lit(2), col("shingle")).as("k2"),
-              col("doc_id"), col("pos"))
-            .persist() // consumed by 3 jobs below; O(batch) rows
-          try {
-            // count window, NOT the qd23 aggregate+join form: inside
-            // foreachBatch AQE is off and `b` is cache-backed — the
-            // join form scans and shuffles the cached batch twice,
-            // measured 15.1 → 18.0 s at sf1; the window's single
-            // shuffle+sort of the batch wins here
-            val wOcc = org.apache.spark.sql.expressions.Window.partitionBy("k1", "k2")
-            val dupB = b.withColumn("n", count(lit(1)).over(wOcc))
-              .filter(col("n") >= 2).select("doc_id", "pos")
-            val prior = state.read(ss, "occ", excludeBatch = Some(batchId))
-            val bSh = b.select("k1", "k2").distinct()
-            // state scans through; only skinny batch shingles broadcast
-            val hitPrior = prior.join(broadcast(bSh), Seq("k1", "k2"))
-            val hitSh = hitPrior.select("k1", "k2").distinct()
-            val batchHitPos = b.join(broadcast(hitSh), Seq("k1", "k2"))
-            // NO per-batch distinct: the marks table's compaction fold IS
-            // distinct and the snapshot read applies distinct again, so
-            // the in-batch shuffle bought nothing — appends stay O(batch)
-            // (≤ 3 rows per batch position + prior hits) with duplicates
-            // collapsed at read, one exchange fewer per micro-batch
-            val marks = dupB
-              .union(batchHitPos.select("doc_id", "pos"))
-              .union(hitPrior.select("doc_id", "pos"))
-            state.endBatch(ss, batchId,
-              "occ" -> b.select("k1", "k2", "doc_id", "pos"),
-              "marks" -> marks)
-          } finally { b.unpersist(); () }
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(docsStream(spark, dir, pathGlobFilter, maxFilesPerTrigger), work,
+        state.alreadyFolded) { (batch, batchId) =>
+      val ss = batch.sparkSession
+      import ss.implicits._
+      val b = batch.select("doc_id", "text").as[(Long, String)]
+        .flatMap { case (id, text) =>
+          graft.operators.TextOps.positionalShingles(text, k)
+            .map { case (p, s) => (id, p, s) } }
+        .toDF("doc_id", "pos", "shingle")
+        // 128-bit digest key, the qd23/Collapse shape: the count
+        // window, the state, and the probes all move 16-byte keys
+        // instead of window text (see qd23DupSpans' collision note)
+        .select(xxhash64(lit(1), col("shingle")).as("k1"),
+          xxhash64(lit(2), col("shingle")).as("k2"),
+          col("doc_id"), col("pos"))
+        .persist() // consumed by 3 jobs below; O(batch) rows
+      try {
+        // count window, NOT the qd23 aggregate+join form: inside
+        // foreachBatch AQE is off and `b` is cache-backed — the
+        // join form scans and shuffles the cached batch twice,
+        // measured 15.1 → 18.0 s at sf1; the window's single
+        // shuffle+sort of the batch wins here
+        val wOcc = org.apache.spark.sql.expressions.Window.partitionBy("k1", "k2")
+        val dupB = b.withColumn("n", count(lit(1)).over(wOcc))
+          .filter(col("n") >= 2).select("doc_id", "pos")
+        val prior = state.read(ss, "occ", excludeBatch = Some(batchId))
+        val bSh = b.select("k1", "k2").distinct()
+        // state scans through; only skinny batch shingles broadcast
+        val hitPrior = prior.join(broadcast(bSh), Seq("k1", "k2"))
+        val hitSh = hitPrior.select("k1", "k2").distinct()
+        val batchHitPos = b.join(broadcast(hitSh), Seq("k1", "k2"))
+        // NO per-batch distinct: the marks table's compaction fold IS
+        // distinct and the snapshot read applies distinct again, so
+        // the in-batch shuffle bought nothing — appends stay O(batch)
+        // (≤ 3 rows per batch position + prior hits) with duplicates
+        // collapsed at read, one exchange fewer per micro-batch
+        val marks = dupB
+          .union(batchHitPos.select("doc_id", "pos"))
+          .union(hitPrior.select("doc_id", "pos"))
+        state.endBatch(ss, batchId,
+          "occ" -> b.select("k1", "k2", "doc_id", "pos"),
+          "marks" -> marks)
+      } finally { b.unpersist(); () }
+    }
     val marked = state.read(spark, "marks").distinct()
     val tokArr = spark.read.schema(docsSchema)
       .option("pathGlobFilter", pathGlobFilter).parquet(dir)
@@ -470,11 +459,9 @@ object Replay {
     * seen so far under the model of everything seen so far — rescoring
     * under tomorrow's model is a read, not a re-ingest.
     *
-    * Same restart contract as the sibling streams: state and checkpoint
-    * reload together under `workDir`; a batch replayed from the
-    * at-least-once window overwrites its own batch-keyed subdirs, which
-    * the exact-count oracle would catch if it double-appended (`n` and
-    * `ct` would inflate, dragging `cr` and every 6-dp score along). */
+    * A replayed batch that double-appended would inflate `n` and `ct`,
+    * dragging `cr` and every 6-dp score along, which the exact-count
+    * oracle would catch. */
   def streamDsir(spark: SparkSession, dir: String,
                  buckets: Int = 1024,
                  maxFilesPerTrigger: Int = 1,
@@ -496,37 +483,24 @@ object Replay {
           .agg(sum("ct").as("ct"))),
         "feat" -> ((df: DataFrame) => df.groupBy("doc_id", "bucket")
           .agg(sum("n").as("n")))))
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          val ss = batch.sparkSession
-          // split on the id BEFORE the kernel: the ~5% target side is
-          // the only input the model delta needs, and the raw side's
-          // instance rows are the state append itself — neither delta
-          // shuffles full-width and nothing is persisted (the two
-          // state writes run concurrently inside endBatch, each
-          // consuming its own one-pass plan)
-          val isT = graft.operators.TextOps.dsirIsTarget(col("doc_id"))
-          val cntDelta = graft.operators.TextOps
-            .dsirBucketed(batch.filter(isT), buckets)
-            .groupBy("bucket").agg(count(lit(1)).as("ct"))
-          val featDelta = graft.operators.TextOps
-            .dsirBucketed(batch.filter(!isT), buckets)
-            .select(col("doc_id"), col("bucket"), lit(1L).as("n"))
-          state.endBatch(ss, batchId,
-            "cnt" -> cntDelta, "feat" -> featDelta)
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(docsStream(spark, dir, pathGlobFilter, maxFilesPerTrigger), work,
+        state.alreadyFolded) { (batch, batchId) =>
+      // split on the id BEFORE the kernel: the ~5% target side is
+      // the only input the model delta needs, and the raw side's
+      // instance rows are the state append itself — neither delta
+      // shuffles full-width and nothing is persisted (the two
+      // state writes run concurrently inside endBatch, each
+      // consuming its own one-pass plan)
+      val isT = graft.operators.TextOps.dsirIsTarget(col("doc_id"))
+      val cntDelta = graft.operators.TextOps
+        .dsirBucketed(batch.filter(isT), buckets)
+        .groupBy("bucket").agg(count(lit(1)).as("ct"))
+      val featDelta = graft.operators.TextOps
+        .dsirBucketed(batch.filter(!isT), buckets)
+        .select(col("doc_id"), col("bucket"), lit(1L).as("n"))
+      state.endBatch(batch.sparkSession, batchId,
+        "cnt" -> cntDelta, "feat" -> featDelta)
+    }
     val feat = state.read(spark, "feat")
       .groupBy("doc_id", "bucket").agg(sum("n").as("n"))
     val ct = state.read(spark, "cnt")
@@ -570,8 +544,7 @@ object Replay {
     * fold keeps compacted state at O(B × sources) rows, and any
     * snapshot read folds the counts and derives the exact batch report
     * (`TextOps.driftReport` — integer nano-nat contributions, so not
-    * even summation order can diverge). Restart contract as siblings:
-    * batch-keyed overwrites, `alreadyFolded` skip, kill-tested. */
+    * even summation order can diverge). */
   def streamDrift(spark: SparkSession, dir: String,
                   buckets: Int = 1024,
                   maxFilesPerTrigger: Int = 1,
@@ -586,23 +559,11 @@ object Replay {
     val state = new AppendOnlyState(work, Seq(("sb", sbSchema)), compactEvery,
       folds = Map("sb" -> ((df: DataFrame) => df.groupBy("source", "bucket")
         .agg(sum("c").as("c")))))
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "sb" -> graft.operators.TextOps.driftBucketed(batch, buckets))
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(docsStream(spark, dir, pathGlobFilter, maxFilesPerTrigger), work,
+        state.alreadyFolded) { (batch, batchId) =>
+      state.endBatch(batch.sparkSession, batchId,
+        "sb" -> graft.operators.TextOps.driftBucketed(batch, buckets))
+    }
     graft.operators.TextOps.driftReport(
       state.read(spark, "sb").groupBy("source", "bucket").agg(sum("c").as("c")),
       buckets)
@@ -642,8 +603,7 @@ object Replay {
     * doc_id div span, deterministic under replay where a wall-clock
     * window would not be) fold into O(B × sources × windows) state;
     * any snapshot read derives the exact per-(source, window)
-    * window-vs-lifetime JS report. Restart contract as the siblings:
-    * batch-keyed overwrites, `alreadyFolded` skip, kill-tested. */
+    * window-vs-lifetime JS report. */
   def streamWindowedDrift(spark: SparkSession, dir: String,
                           buckets: Int = 1024,
                           span: Long = 250L,
@@ -660,24 +620,11 @@ object Replay {
     val state = new AppendOnlyState(work, Seq(("swb", swbSchema)), compactEvery,
       folds = Map("swb" -> ((df: DataFrame) => df.groupBy("source", "w", "bucket")
         .agg(sum("c").as("c")))))
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "swb" -> graft.operators.TextOps.windowedDriftBucketed(
-              batch, buckets, span))
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(docsStream(spark, dir, pathGlobFilter, maxFilesPerTrigger), work,
+        state.alreadyFolded) { (batch, batchId) =>
+      state.endBatch(batch.sparkSession, batchId,
+        "swb" -> graft.operators.TextOps.windowedDriftBucketed(batch, buckets, span))
+    }
     graft.operators.TextOps.windowedDriftReport(
       state.read(spark, "swb").groupBy("source", "w", "bucket")
         .agg(sum("c").as("c")),
@@ -698,8 +645,7 @@ object Replay {
     * ride beside it for the estimate-vs-exact quality report (the q25
     * HLL / q36 GK pattern — hash-checked, not tolerance-checked); a
     * deployment that trusted the sketch would drop `tc` and keep state
-    * at exactly D × W longs. Restart contract as the drift siblings:
-    * batch-keyed overwrites, `alreadyFolded` skip, kill-tested. */
+    * at exactly D × W longs. */
   def streamCms(spark: SparkSession, dir: String,
                 width: Int = 16, depth: Int = 4,
                 maxFilesPerTrigger: Int = 1,
@@ -721,25 +667,13 @@ object Replay {
           .agg(sum("c").as("c"))),
         "tc" -> ((df: DataFrame) => df.groupBy("term")
           .agg(sum("c").as("c")))))
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          val tcDelta = graft.operators.TextOps.cmsTermCounts(batch)
-          state.endBatch(batch.sparkSession, batchId,
-            "sk" -> graft.operators.TextOps.cmsSketch(tcDelta, width, depth),
-            "tc" -> tcDelta)
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(docsStream(spark, dir, pathGlobFilter, maxFilesPerTrigger), work,
+        state.alreadyFolded) { (batch, batchId) =>
+      val tcDelta = graft.operators.TextOps.cmsTermCounts(batch)
+      state.endBatch(batch.sparkSession, batchId,
+        "sk" -> graft.operators.TextOps.cmsSketch(tcDelta, width, depth),
+        "tc" -> tcDelta)
+    }
     graft.operators.TextOps.cmsReport(
       state.read(spark, "sk").groupBy("j", "bucket").agg(sum("c").as("c")),
       state.read(spark, "tc").groupBy("term").agg(sum("c").as("c")),
@@ -764,9 +698,7 @@ object Replay {
     * append-only; the stats row is a sum monoid whose terms are
     * integer-valued doubles, so the folded avgdl is bit-equal to the
     * batch `avg` and the final ranking folds to exactly qd8 across any
-    * batch boundary (shared oracle SQL). Restart contract as the
-    * sketch siblings: batch-keyed overwrites, `alreadyFolded` skip,
-    * kill-tested. */
+    * batch boundary (shared oracle SQL). */
   def streamBm25(spark: SparkSession, dir: String,
                  queryTerms: Seq[String] = Seq("spark", "query", "window"),
                  topK: Int = 10,
@@ -790,25 +722,12 @@ object Replay {
       folds = Map(
         "cs" -> ((df: DataFrame) => df.agg(
           sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl")))))
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          val (pt, dl, cs) =
-            graft.text.Search.bm25BatchDeltas(batch, queryTerms)
-          state.endBatch(batch.sparkSession, batchId,
-            "pt" -> pt, "dl" -> dl, "cs" -> cs)
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(docsStream(spark, dir, pathGlobFilter, maxFilesPerTrigger), work,
+        state.alreadyFolded) { (batch, batchId) =>
+      val (pt, dl, cs) = graft.text.Search.bm25BatchDeltas(batch, queryTerms)
+      state.endBatch(batch.sparkSession, batchId,
+        "pt" -> pt, "dl" -> dl, "cs" -> cs)
+    }
     val stats = state.read(spark, "cs")
       .agg(sum("n_docs").as("nl"), sum("sum_dl").as("sdl"))
       .select(col("nl").cast("double").as("n"),
@@ -833,9 +752,7 @@ object Replay {
     * report rebuilds both rankings from state with the SAME factored
     * tails the batch form uses (bm25From / denseRanked / rrfFuse), so
     * the fused ranking folds to exactly qd40 across any batch boundary
-    * and the oracle SQL is shared verbatim. Restart contract as the
-    * family: batch-keyed overwrites, `alreadyFolded` skip,
-    * kill-tested. */
+    * and the oracle SQL is shared verbatim. */
   def streamHybridRrf(spark: SparkSession, dir: String,
                       queryTerms: Seq[String] = Seq("spark", "query", "window"),
                       candK: Int = graft.text.Search.HybridCandK,
@@ -868,41 +785,28 @@ object Replay {
       folds = Map(
         "cs" -> ((df: DataFrame) => df.agg(
           sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl")))))
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          val ss = batch.sparkSession
-          // the dense side's per-batch docTf checkpoint (the md5-per-token
-          // pass) is the batch's only SERIAL job — start it on a future so
-          // the sparse-side appends overlap it (guide §2.6); the dt/dn
-          // append thunks then block on it inside endBatchWork's pool
-          // while pt/dl/cs write concurrently. Await.result rethrows the
-          // original failure, so an error surfaces exactly as before.
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          import scala.concurrent.duration.Duration
-          val htfF = Future {
-            labeled(ss, "hybrid: batch docTf")(
-              graft.text.Search.htfBatchDeltas(batch, queryTerms))
-          }
-          val (pt, dl, cs) =
-            graft.text.Search.bm25BatchDeltas(batch, queryTerms)
-          state.endBatchWork(ss, batchId, Nil,
-            "pt" -> (() => pt), "dl" -> (() => dl), "cs" -> (() => cs),
-            "dt" -> (() => Await.result(htfF, Duration.Inf)._1),
-            "dn" -> (() => Await.result(htfF, Duration.Inf)._2))
-        }
-        maybePoison(batchId)
-        ()
+    drain(docsStream(spark, dir, pathGlobFilter, maxFilesPerTrigger), work,
+        state.alreadyFolded) { (batch, batchId) =>
+      val ss = batch.sparkSession
+      // the dense side's per-batch docTf checkpoint (the md5-per-token
+      // pass) is the batch's only SERIAL job — start it on a future so
+      // the sparse-side appends overlap it (guide §2.6); the dt/dn
+      // append thunks then block on it inside endBatchWork's pool
+      // while pt/dl/cs write concurrently. Await.result rethrows the
+      // original failure, so an error surfaces exactly as before.
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration.Duration
+      val htfF = Future {
+        labeled(ss, "hybrid: batch docTf")(
+          graft.text.Search.htfBatchDeltas(batch, queryTerms))
       }
-      .start()
-    q.awaitTermination()
+      val (pt, dl, cs) = graft.text.Search.bm25BatchDeltas(batch, queryTerms)
+      state.endBatchWork(ss, batchId, Nil,
+        "pt" -> (() => pt), "dl" -> (() => dl), "cs" -> (() => cs),
+        "dt" -> (() => Await.result(htfF, Duration.Inf)._1),
+        "dn" -> (() => Await.result(htfF, Duration.Inf)._2))
+    }
     val stats = state.read(spark, "cs")
       .agg(sum("n_docs").as("nl"), sum("sum_dl").as("sdl"))
       .select(col("nl").cast("double").as("n"),
@@ -931,10 +835,9 @@ object Replay {
     * snapshot read's dup-group window over the accumulated index folds
     * to exactly the batch report — a dup pair whose members arrived in
     * different batches is found the moment the later member lands.
-    * Restart contract as the codes-index siblings: batch-keyed
-    * overwrites, `alreadyFolded` skip — a double-appended batch would
-    * duplicate (media_id, dhash) rows and break the report's
-    * one-row-per-image shape, which the shared qm4 oracle catches. */
+    * A double-appended batch would duplicate (media_id, dhash) rows and
+    * break the report's one-row-per-image shape, which the shared qm4
+    * oracle catches. */
   def streamPhashDedup(spark: SparkSession, dir: String,
                        maxFilesPerTrigger: Int = 1,
                        pathGlobFilter: String = "*.parquet",
@@ -945,23 +848,11 @@ object Replay {
       StructField("media_id", LongType),
       StructField("dhash", StringType)))
     val state = new AppendOnlyState(work, Seq(("h", hSchema)), compactEvery)
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "h" -> graft.enrich.Multimodal.phashFrame(batch))
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(docsStream(spark, dir, pathGlobFilter, maxFilesPerTrigger), work,
+        state.alreadyFolded) { (batch, batchId) =>
+      state.endBatch(batch.sparkSession, batchId,
+        "h" -> graft.enrich.Multimodal.phashFrame(batch))
+    }
     graft.enrich.Multimodal.phashReport(state.read(spark, "h"))
   }
 
@@ -973,10 +864,9 @@ object Replay {
     * appends its feature rows to the append-only table. Features are
     * immutable integer facts, so the snapshot read IS the report — no
     * fold — and equals qm5 over the same corpus (shared oracle SQL).
-    * Restart contract as the family: batch-keyed overwrites,
-    * `alreadyFolded` skip; a double-appended batch would duplicate
-    * media rows and break the one-row-per-clip shape, which the shared
-    * oracle's row count catches. */
+    * A double-appended batch would duplicate media rows and break the
+    * one-row-per-clip shape, which the shared oracle's row count
+    * catches. */
   def streamAudioFeatures(spark: SparkSession, dir: String,
                           maxFilesPerTrigger: Int = 1,
                           pathGlobFilter: String = "*.parquet",
@@ -991,23 +881,11 @@ object Replay {
       StructField("sum_abs", LongType),
       StructField("zero_crossings", LongType)))
     val state = new AppendOnlyState(work, Seq(("af", afSchema)), compactEvery)
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "af" -> graft.enrich.Multimodal.audioFrame(batch))
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(docsStream(spark, dir, pathGlobFilter, maxFilesPerTrigger), work,
+        state.alreadyFolded) { (batch, batchId) =>
+      state.endBatch(batch.sparkSession, batchId,
+        "af" -> graft.enrich.Multimodal.audioFrame(batch))
+    }
     state.read(spark, "af").orderBy("media_id")
   }
 
@@ -1025,10 +903,9 @@ object Replay {
     * form's factored tail (`knReport`), so every model quantity
     * (context totals, continuation counts, the type total) derives
     * from the folded monoid and the result equals qd42 exactly —
-    * shared oracle SQL. Restart contract as the family: batch-keyed
-    * overwrites, `alreadyFolded` skip; a double-folded batch inflates
-    * its bigrams' counts AND every derived quantity, which exact
-    * equality catches. */
+    * shared oracle SQL. A double-folded batch would inflate its
+    * bigrams' counts AND every derived quantity, which exact equality
+    * catches. */
   def streamKneserNey(spark: SparkSession, dir: String,
                       maxFilesPerTrigger: Int = 1,
                       pathGlobFilter: String = "*.parquet",
@@ -1042,25 +919,13 @@ object Replay {
     val state = new AppendOnlyState(work, Seq(("ty", tySchema)), compactEvery,
       folds = Map("ty" -> ((df: DataFrame) =>
         df.groupBy("hu1", "hu2", "hw1", "hw2").agg(sum("c").as("c")))))
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "ty" -> graft.operators.TextOps.knPositions(batch)
-              .groupBy("hu1", "hu2", "hw1", "hw2")
-              .agg(count(lit(1)).as("c")))
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(docsStream(spark, dir, pathGlobFilter, maxFilesPerTrigger), work,
+        state.alreadyFolded) { (batch, batchId) =>
+      state.endBatch(batch.sparkSession, batchId,
+        "ty" -> graft.operators.TextOps.knPositions(batch)
+          .groupBy("hu1", "hu2", "hw1", "hw2")
+          .agg(count(lit(1)).as("c")))
+    }
     val snapshot = spark.read.schema(docsSchema)
       .option("pathGlobFilter", pathGlobFilter).parquet(dir)
     graft.operators.TextOps.knReport(
@@ -1081,11 +946,9 @@ object Replay {
     * per-clip metadata facts. Append-only with no fold — one row per
     * clip, O(batch) per trigger — so the converged state equals the
     * batch answer regardless of arrival order and the driver can
-    * hash-check it against qm7's SQL oracle verbatim. Restart contract
-    * as the family: batch-keyed overwrites, `alreadyFolded` skip; a
-    * double-appended batch duplicates clip rows and breaks the
-    * one-row-per-clip shape, which the shared oracle's row count
-    * catches. */
+    * hash-check it against qm7's SQL oracle verbatim. A double-appended
+    * batch would duplicate clip rows and break the one-row-per-clip
+    * shape, which the shared oracle's row count catches. */
   def streamMp4Metadata(spark: SparkSession, dir: String,
                         maxFilesPerTrigger: Int = 1,
                         pathGlobFilter: String = "*.parquet",
@@ -1102,23 +965,11 @@ object Replay {
       StructField("codecs", StringType),
       StructField("container_bytes", LongType)))
     val state = new AppendOnlyState(work, Seq(("mm", mmSchema)), compactEvery)
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "mm" -> graft.enrich.Multimodal.mp4Frame(batch))
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(docsStream(spark, dir, pathGlobFilter, maxFilesPerTrigger), work,
+        state.alreadyFolded) { (batch, batchId) =>
+      state.endBatch(batch.sparkSession, batchId,
+        "mm" -> graft.enrich.Multimodal.mp4Frame(batch))
+    }
     state.read(spark, "mm").orderBy("media_id")
   }
 
@@ -1131,8 +982,7 @@ object Replay {
     * the media streaming symmetry (qs24 images, qs30 audio features,
     * qs34 video containers, qs35 audio containers): per-batch frame
     * walks (`Multimodal.mpegAudioFrame`) into an append-only per-stream
-    * metadata index. Same append-only/no-fold convergence and restart
-    * contract as qs34. (qm9/qm10/qm12/qm14 probe DEEPER layers of the
+    * metadata index. Same append-only/no-fold convergence as qs34. (qm9/qm10/qm12/qm14 probe DEEPER layers of the
     * same `.mp4` object qs34 already streams, and qm13 drives qm10's
     * plan through a transport — their arrival-time shape would be this
     * same kernel swap, so they deliberately get no separate streaming
@@ -1152,23 +1002,11 @@ object Replay {
       StructField("duration_ms", LongType),
       StructField("stream_bytes", LongType)))
     val state = new AppendOnlyState(work, Seq(("ma", maSchema)), compactEvery)
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "ma" -> graft.enrich.Multimodal.mpegAudioFrame(batch))
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(docsStream(spark, dir, pathGlobFilter, maxFilesPerTrigger), work,
+        state.alreadyFolded) { (batch, batchId) =>
+      state.endBatch(batch.sparkSession, batchId,
+        "ma" -> graft.enrich.Multimodal.mpegAudioFrame(batch))
+    }
     state.read(spark, "ma").orderBy("media_id")
   }
 
@@ -1187,9 +1025,8 @@ object Replay {
     * segment rows. Append-only with no fold: one row per doc, so the
     * converged state equals the batch answer regardless of arrival
     * order and the driver hash-checks it against qd43's SQL oracle
-    * verbatim. Restart contract as the family: batch-keyed overwrites,
-    * `alreadyFolded` skip; a double-appended batch duplicates doc rows,
-    * which the shared oracle's row count catches. */
+    * verbatim. A double-appended batch would duplicate doc rows, which
+    * the shared oracle's row count catches. */
   def streamUnigramSegment(spark: SparkSession, dir: String,
                            maxFilesPerTrigger: Int = 1,
                            pathGlobFilter: String = "*.parquet",
@@ -1207,23 +1044,11 @@ object Replay {
     // frozen model: the deterministic capped vocabulary of the corpus
     val pieces = graft.text.Unigram.inducedPieces(
       spark.read.schema(docsSchema).parquet(dir), piecesMemoKey)
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!state.alreadyFolded(batchId)) {
-          state.endBatch(batch.sparkSession, batchId,
-            "seg" -> graft.text.Unigram.segmentWith(batch, pieces))
-        }
-        maybePoison(batchId)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(docsStream(spark, dir, pathGlobFilter, maxFilesPerTrigger), work,
+        state.alreadyFolded) { (batch, batchId) =>
+      state.endBatch(batch.sparkSession, batchId,
+        "seg" -> graft.text.Unigram.segmentWith(batch, pieces))
+    }
     state.read(spark, "seg").orderBy("doc_id")
   }
 
@@ -1313,28 +1138,15 @@ object Replay {
     val state = new AppendOnlyState(work,
       nearDupStateSchemas :+ ("h" -> hSchema), compactEvery)
     bandRowsPerBatch.clear()
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        if (state.alreadyFolded(batchId)) { maybePoison(batchId) }
-        else {
-          val (ndDeltas, emitWrite) = nearDupBatchDelta(state, ss, batch,
-            batchId, threshold, precomputedSigs, outDir)
-          state.endBatchWork(ss, batchId, Seq(emitWrite),
-            (ndDeltas :+ ("h" -> graft.enrich.Multimodal.phashFrame(batch)))
-              .map { case (t, df) => (t, () => df) }: _*)
-          maybePoison(batchId)
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(docsStream(spark, dir, pathGlobFilter, maxFilesPerTrigger), work,
+        state.alreadyFolded) { (batch, batchId) =>
+      val ss = batch.sparkSession
+      val (ndDeltas, emitWrite) = nearDupBatchDelta(state, ss, batch,
+        batchId, threshold, precomputedSigs, outDir)
+      state.endBatchWork(ss, batchId, Seq(emitWrite),
+        (ndDeltas :+ ("h" -> graft.enrich.Multimodal.phashFrame(batch)))
+          .map { case (t, df) => (t, () => df) }: _*)
+    }
     val pairs = nearDupEmissions(spark, outDir)
     val docsDf = spark.read.schema(docsSchema)
       .option("pathGlobFilter", pathGlobFilter).parquet(dir)
@@ -1394,17 +1206,8 @@ object Replay {
     * batches the per-batch parquet files are compacted into a fresh
     * generation dir and the superseded generation is deleted.
     *
-    * Restart contract: the dedup state lives NEXT TO the streaming
-    * checkpoint under one `work` dir and the two reload TOGETHER — pass
-    * `workDir` and a restarted invocation resumes where the crash left
-    * off: the checkpoint skips already-ingested files, `AppendOnlyState`
-    * reconstructs its generation clock from the directory layout, and a
-    * batch replayed from the at-least-once window (crash between the
-    * state append and the checkpoint commit) overwrites its own
-    * batch-keyed state/output subdirs instead of appending twice. Emitted
-    * pairs accumulate under batch-keyed subdirs across restarts, so the
-    * final read returns the COMPLETE pair set. The default (no `workDir`)
-    * is a fresh temp dir per invocation, cleaned at JVM exit. */
+    * Emitted pairs accumulate under batch-keyed subdirs across restarts,
+    * so the final read returns the COMPLETE pair set. */
   /** The near-dup fold's four append-only state tables — shared by
     * `streamNearDup` and the composite curation stream (qs26). */
   private val nearDupStateSchemas: Seq[(String, StructType)] = Seq(
@@ -1432,30 +1235,14 @@ object Replay {
     val outDir = s"$work/pairs_out"
     val state = new AppendOnlyState(work, nearDupStateSchemas, compactEvery)
     bandRowsPerBatch.clear()
-    val q = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", pathGlobFilter)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(dir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", s"$work/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ss = batch.sparkSession
-        // a replayed batch that compaction already folded in cannot be
-        // excluded from state reads — and its writes all completed
-        // (compaction runs inside its endBatch) — so skip it wholesale
-        if (state.alreadyFolded(batchId)) { maybePoison(batchId) }
-        else {
-          val (deltas, emitWrite) = nearDupBatchDelta(state, ss, batch,
-            batchId, threshold, precomputedSigs, outDir)
-          state.endBatchWork(ss, batchId, Seq(emitWrite),
-            deltas.map { case (t, df) => (t, () => df) }: _*)
-          maybePoison(batchId)
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(docsStream(spark, dir, pathGlobFilter, maxFilesPerTrigger), work,
+        state.alreadyFolded) { (batch, batchId) =>
+      val ss = batch.sparkSession
+      val (deltas, emitWrite) = nearDupBatchDelta(state, ss, batch,
+        batchId, threshold, precomputedSigs, outDir)
+      state.endBatchWork(ss, batchId, Seq(emitWrite),
+        deltas.map { case (t, df) => (t, () => df) }: _*)
+    }
     nearDupEmissions(spark, outDir)
   }
 

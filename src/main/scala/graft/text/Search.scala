@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.GraftSession.labeled
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -143,28 +144,22 @@ object Search {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     val (sparse, docTf) = try {
       val fSparse = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-        def call(): DataFrame = {
-          spark.sparkContext.setJobDescription("hybrid: sparse candidates")
-          try bm25(spark, dir, queryTerms, candK)
+        def call(): DataFrame = labeled(spark, "hybrid: sparse candidates")(
+          bm25(spark, dir, queryTerms, candK)
             .select(col("doc_id"), col("rank").as("sparse_rank"))
-            .localCheckpoint(true)
-          finally spark.sparkContext.setJobDescription(null)
-        }
+            .localCheckpoint(true))
       })
       // the md5 bucket hash costs ~1µs/token over every token in the
       // corpus; norm + dot would otherwise re-run that subtree, so pin
       // the AGGREGATED frame (≤ docs × buckets rows — tiny) once
       val fDocTf = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-        def call(): DataFrame = {
-          spark.sparkContext.setJobDescription("hybrid: dense docTf")
-          try docs
+        def call(): DataFrame = labeled(spark, "hybrid: dense docTf")(
+          docs
             .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("term"))
             .select(col("doc_id"), htfBucket(col("term")).as("bucket"))
             .groupBy("doc_id", "bucket")
             .agg(count(lit(1)).cast("double").as("tf"))
-            .localCheckpoint(true)
-          finally spark.sparkContext.setJobDescription(null)
-        }
+            .localCheckpoint(true))
       })
       def unwrap(f: java.util.concurrent.Future[DataFrame]): DataFrame =
         try f.get() catch {
